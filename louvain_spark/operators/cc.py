@@ -121,9 +121,6 @@ def connected_components(
                 F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
             ).alias("h"),
         )
-        from louvain_spark.plans.explain import dump as _dump
-
-        _dump(nxt, "cc_round")
         nxt = runner.advance(StepResult(nxt))
         vals = obs.get
         sig = (int(vals["n"]), int(vals["h"]))

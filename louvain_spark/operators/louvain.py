@@ -46,17 +46,6 @@ from __future__ import annotations
 import os
 
 import pandas as pd
-
-_DBG = bool(os.environ.get("LOUVAIN_DEBUG"))
-
-
-def _dbg_mark(label: str):
-    if _DBG:
-        import sys as _sys
-        import time as _time
-
-        print(f"[louvain-dbg] {label} t={_time.monotonic():.1f}", file=_sys.stderr, flush=True)
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -221,7 +210,6 @@ def _one_level_parallel(
     from louvain_spark.operators.quality import modularity as q_mod
 
     e = edges.persist()
-    _dbg_mark("par-setup-start")
     # total weight and vertex count are loop/level invariants the caller
     # usually already knows (Σw survives coarsening exactly; auto mode
     # counts ids for its threshold gate) — accept them to skip the
@@ -281,17 +269,10 @@ def _one_level_parallel(
     assign = k.select(
         "id", F.col("id").alias("community"), "k"
     ).localCheckpoint(eager=True)
-    _dbg_mark("par-setup-done")
     res, mm, lvl, sd = float(resolution), float(m), int(level), int(seed)
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
-
-        if _DBG:
-            import sys as _sys
-            import time as _time
-
-            _kt0 = _time.monotonic()
 
         moved_ids, new_coms = block_local_moves(
             pdf["src"].to_numpy(),
@@ -310,32 +291,9 @@ def _one_level_parallel(
             int(pdf["_blk"].iloc[0]),
             n_blocks,
         )
-        if _DBG:
-            print(
-                f"[kernel] blk={int(pdf['_blk'].iloc[0])} sweep={int(pdf['_sweep'].iloc[0])}"
-                f" rows={len(pdf)} moved={len(moved_ids)}"
-                f" wall={_time.monotonic() - _kt0:.2f}s",
-                file=_sys.stderr,
-                flush=True,
-            )
         return pd.DataFrame({"id": moved_ids, "new_com": new_coms}).astype("int64")
 
     for sweep in range(max_sweeps):
-        if _DBG:
-            import sys as _sys
-            import time as _time
-
-            _t0 = _time.monotonic()
-
-            def _mark(label, _t0=_t0):
-                print(
-                    f"[louvain-par]   {label} +{_time.monotonic() - _t0:.2f}s",
-                    file=_sys.stderr,
-                    flush=True,
-                )
-        else:
-            def _mark(label):
-                pass
         # ONE combined per-vertex dimension per sweep — (id, community, k,
         # Σ_tot of its community) — joined twice (src side and dst side)
         # through TWO ALIASES OF THE IDENTICAL SUBTREE, both keyed on id:
@@ -417,45 +375,18 @@ def _one_level_parallel(
             )
             .select("id", "community", "k")
         )
-        if sweep == 1:  # steady-state sweep plan (plans/r07 capture)
-            from louvain_spark.plans.explain import dump as _dump
-
-            _dump(merged, "louvain_sweep")
         assign = _stats_reset(spark, merged, ckpt_dir, f"assign-l{level}-s{sweep}")
         moved = int(obs.get["n"])
         # frees sweep 0's initial eager localCheckpoint blocks (|V|-sized);
         # later sweeps' prev_assign is parquet-backed — a no-op there
         prev_assign.unpersist()
-        _mark("sweep-action")
-        if _DBG:
-            qe = assign._jdf.queryExecution()
-            adigits = len(str(qe.analyzed().stats().sizeInBytes()))
-            tq = tagged._jdf.queryExecution()
-            tdigits = len(str(tq.analyzed().stats().sizeInBytes()))
-            print(
-                f"[louvain-par]   stats-digits: assign={adigits} tagged={tdigits}"
-                f" assign_plan={len(qe.toString())}",
-                file=__import__("sys").stderr,
-                flush=True,
-            )
-        if _DBG:
-            import sys as _sys
-            import time as _time
-
-            print(
-                f"[louvain-par] level={level} sweep={sweep} moved={moved} t={_time.monotonic():.1f}",
-                file=_sys.stderr,
-                flush=True,
-            )
         if moved < min_moved:
             # the sub-threshold sweep's few moves are already applied (the
             # merge rides the same action) — keep them, stop sweeping
             break
 
     assign = assign.select("id", "community")  # drop the loop-carried k
-    _dbg_mark("par-mod-start")
     mod = q_mod(e.withColumnRenamed("w", "weight"), assign, resolution, "weight")
-    _dbg_mark("par-mod-done")
     e.unpersist()
     k.unpersist()
     sym.unpersist()
@@ -545,9 +476,7 @@ def louvain(
     # materialize the normalized canonical edge table once: every sweep
     # re-plans over it, and carrying the caller's lineage (e.g. an inline
     # local relation) into each task binary dominated sweep time by 4-10x
-    _dbg_mark("normalize-start")
     e = _stats_reset(spark, _normalize(edges, weight_col), ckpt_base, "edges-l0")
-    _dbg_mark("normalize-done")
     total_w = e.agg(F.coalesce(F.sum("w"), F.lit(0.0))).collect()[0][0]
     if not total_w:
         from louvain_spark.plans.rank import dense_sorted_rank
@@ -561,16 +490,12 @@ def louvain(
     assign, mod, needs_rn = one_level(
         spark, e, ids, resolution, seed, 0, total_w=float(total_w)
     )
-    _dbg_mark("level0-done")
     if needs_rn:
         assign = _renumber(assign)
-    _dbg_mark("renumber0-done")
     mapping = runner.advance(StepResult(assign, metric=mod))
-    _dbg_mark("advance0-done")
     # level boundaries are natural checkpoints: cut lineage so each level's
     # sweeps replan against a flat, materialized graph
     cur_edges = _stats_reset(spark, _coarsen(e, mapping), ckpt_base, "edges-l1")
-    _dbg_mark("coarsen0-done")
     mapping, mod = _level_loop(
         spark, one_level, runner, ckpt_base, mapping, mod, cur_edges,
         start_level=1, max_levels=max_levels, resolution=resolution,
@@ -591,11 +516,9 @@ def _level_loop(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        _dbg_mark(f"level{level}-ids-ready")
         assign, new_mod, needs_rn = one_level(
             spark, cur_edges, cur_ids, resolution, seed, level, total_w=total_w
         )
-        _dbg_mark(f"level{level}-done")
         if new_mod - mod < min_gain:
             break
         if needs_rn:
@@ -612,7 +535,6 @@ def _level_loop(
         cur_edges = _stats_reset(
             spark, _coarsen(cur_edges, assign), ckpt_base, f"edges-l{level + 1}"
         )
-        _dbg_mark(f"coarsen{level}-done")
     return mapping, float(mod)
 
 

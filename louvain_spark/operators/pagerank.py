@@ -188,10 +188,6 @@ def pagerank(
                 F.sum(F.when(F.col("_dangling"), F.col("score"))), F.lit(0.0)
             ).alias("dangling"),
         ).select("id", "score")
-        if done > 0:  # steady-state batch plan (plans/r07 capture)
-            from louvain_spark.plans.explain import dump as _dump
-
-            _dump(new_ranks, "pagerank_batch")
         new_ranks = runner.advance(
             StepResult(new_ranks, observation=obs, metric_key="delta", steps=batch)
         )

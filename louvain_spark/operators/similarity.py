@@ -1,6 +1,6 @@
 """Top-k cosine similarity joins (J2/W1) + ANN over embedding columns.
 
-Two physical strategies (SURVEY.md §4.2):
+Two exact strategies (SURVEY.md §4.2):
 
 - brute: crossJoin + JVM-side dot product (zip_with/aggregate higher-order
   functions — no Python) + per-query window top-k. Exact; fine when
@@ -19,6 +19,10 @@ Two physical strategies (SURVEY.md §4.2):
   Replication cost is explicit: queries × chunks + items × blocks rows
   through one shuffle.
 
+Two approximate scale paths, LSH (sign-random-projection buckets) and
+IVF (k-means inverted lists), route their candidate cells through the
+same Arrow cell kernel as blocked (_make_topk_cell_arrow → _topk_core).
+
 Vectors are assumed L2-normalized (dot == cosine), as the reference
 normalizes before caching (/root/reference/tool/Neo4jLouvainProcessor.py:96).
 """
@@ -33,25 +37,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def dot_col(a, b, dim: int | None = None):
-    """JVM-side dot product of two array<float/double> columns (F8).
-
-    With `dim` given, the fold is unrolled into a flat codegen-able sum:
-    Catalyst higher-order functions (aggregate/zip_with) are
-    CodegenFallback — evaluated interpretively per ELEMENT with per-call
-    InternalRow allocation — which made the LSH pair-scoring stage spend
-    its wall on expression interpretation (measured ~6s of a 15s stage at
-    10M candidate pairs × 64 dims). The unrolled form keeps the exact
-    left-fold association and operand casts ((((0.0 + x0·y0) + x1·y1) + …,
-    float operands promoted to double per element), so every sum is
-    BIT-IDENTICAL to the HOF form — the ANN oracle hashes pin this.
-    Without `dim` (unknown width) the HOF form remains.
-    """
-    if dim is not None:
-        expr = F.lit(0.0)
-        for i in range(int(dim)):
-            expr = expr + F.get(a, i) * F.get(b, i).cast("double")
-        return expr
+def dot_col(a, b):
+    """JVM-side dot product of two array<float/double> columns (F8): a
+    left fold (((0.0 + x0·y0) + x1·y1) + …) with operands promoted to
+    double per element. Catalyst higher-order functions are
+    CodegenFallback (interpreted per element), so the hot ANN paths score
+    in the numpy cell kernel instead; this stays for brute and the
+    semantic blend."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y.cast("double")),
         F.lit(0.0),
@@ -102,7 +94,7 @@ def _topk_core(
     Query rows are processed in blocks sized so the score matrix stays
     ~16MB, with the score buffer preallocated once and reused across
     blocks (matmul out=, in-place negate, sparse self-exclusion writes).
-    Two reasons, both measured (tools/diag_ivf_cell.py, BENCH r5):
+    Two reasons, both measured (COVERAGE.md round 5, BENCH/BASELINE.md):
     (a) peak memory — an unblocked hot cell (e.g. 30k queries × 5k
     items) transiently allocates ~4GB of fp64/int64 temporaries, an OOM
     risk at 4g/core executors; (b) allocation churn — full-width
@@ -189,7 +181,7 @@ def _make_topk_cell_arrow(kk: int, thr: float | None, excl: bool):
     applyInPandas form of the same math at the scaling preset (60k
     vectors, 64 lists), where pandas list-column materialization plus a
     per-row top-k loop made the IVF re-rank ~8x slower than its matmul
-    work (BENCH/BASELINE.md r5, tools/diag_ivf_phases.py)."""
+    work (BENCH/BASELINE.md r5, COVERAGE.md round 5)."""
     import pyarrow as pa
 
     out_schema = pa.schema(
@@ -207,26 +199,6 @@ def _make_topk_cell_arrow(kk: int, thr: float | None, excl: bool):
         return pa.table(
             {"query_id": out_q, "item_id": out_i, "sim": out_s}, schema=out_schema
         )
-
-    return cell
-
-
-def _make_topk_cell(kk: int, thr: float | None, excl: bool):
-    """applyInPandas form of _make_topk_cell_arrow (same _topk_core math,
-    same contract) — kept for callers/tests that feed pandas frames."""
-
-    def cell(qpdf: pd.DataFrame, ipdf: pd.DataFrame) -> pd.DataFrame:
-        if len(qpdf) == 0 or len(ipdf) == 0:
-            return pd.DataFrame({"query_id": [], "item_id": [], "sim": []}).astype(
-                {"query_id": "int64", "item_id": "int64", "sim": "float64"}
-            )
-        qv = np.array(list(qpdf["_qv"]), dtype=np.float64)
-        mat = np.array(list(ipdf["_iv"]), dtype=np.float64)
-        out_q, out_i, out_s = _topk_core(
-            qpdf["query_id"].to_numpy(), qv, ipdf["item_id"].to_numpy(), mat,
-            kk, thr, excl,
-        )
-        return pd.DataFrame({"query_id": out_q, "item_id": out_i, "sim": out_s})
 
     return cell
 
@@ -316,47 +288,19 @@ def rademacher_planes(
     ]
 
 
-def _bucket_expr(vec_col, planes_t: list[list[float]], table: int):
-    """Bucket key for one hash table: sign bits of the vector's projection
-    onto each ±1 plane, packed into a string — pure Catalyst (zip_with /
-    aggregate HOFs), no Python in the hot path.
-
-    Kept as the HOF fold deliberately (r7 measurement): an unrolled flat
-    add/subtract chain (n_planes·dim ≈ 2560 terms per row) was 4× SLOWER
-    (10.4s vs 2.5s per table side at 30k×64-dim) — the giant projection
-    overwhelms codegen and falls back to interpreted evaluation of a deep
-    expression tree — and a vectorized pandas-UDF variant measured no
-    faster end-to-end than this fold (11.9s vs 10.5s full stage)."""
-    bits = [
-        F.when(
-            F.aggregate(
-                F.zip_with(
-                    vec_col,
-                    F.array(*[F.lit(x) for x in row]),
-                    lambda a, b: a.cast("double") * b,
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            >= 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0"))
-        for row in planes_t
-    ]
-    return F.concat(F.lit(f"{table}:"), *bits)
-
-
 def _bucket_keys_udf(planes, n_tables: int):
     """All n_tables bucket keys for a vector as ONE vectorized Arrow
-    kernel call (pandas_udf → array<string>), replacing n_tables·n_planes
-    interpreted HOF folds per row (measured 3.1s per side at 30k×64-dim
-    ×40 planes vs ~0.4s for this kernel).
+    kernel call (pandas_udf → array<string>): key "t:bits", one sign bit
+    per plane of table t. Replaces n_tables·n_planes interpreted Catalyst
+    HOF folds per row (measured 3.1s per side at 30k×64-dim ×40 planes vs
+    ~0.4s for this kernel; an unrolled flat Catalyst sum was slower still,
+    r7).
 
-    BIT-IDENTICAL keys to _bucket_expr: the projection accumulates with
-    the same left fold — per dimension i, acc = acc + vec[i]·plane[i] in
+    The projection is the left fold the driver oracle replays in SQL
+    (_lsh_ann_sql) — per dimension i, acc = acc + vec[i]·plane[i] in
     float64, vectorized ACROSS rows/planes (the numpy loop runs over
-    dims, so each element's additions happen in the exact HOF order) —
-    and the sign test is the same `>= 0`. Planes are closure-captured
+    dims, so each element's additions happen in fold order) — and the
+    sign test is `>= 0`. Planes are closure-captured
     (O(n_tables·n_planes·dim) floats, shipped once per executor)."""
     sign = [np.asarray(t, dtype=np.float64) for t in planes[:n_tables]]  # (planes, dim)
     from pyspark.sql.functions import pandas_udf
@@ -383,7 +327,7 @@ def _bucket_keys_udf(planes, n_tables: int):
 
 
 def _cap_items(ib: DataFrame, max_bucket: int) -> DataFrame:
-    """Two-level exact hot-cell cap (see _lsh_candidates docstring).
+    """Two-level exact hot-cell cap (see _lsh_buckets).
 
     Works on any frame with (item_id, bucket [, payload...]) — level 1
     caps 64 hash-salted subgroups so no window task holds a whole hot
@@ -407,15 +351,15 @@ def _cap_items(ib: DataFrame, max_bucket: int) -> DataFrame:
     )
 
 
-def _lsh_candidates(
+def _lsh_buckets(
     q: DataFrame,
     i: DataFrame,
     planes,
     n_tables: int,
-    exclude_self: bool,
     max_bucket: int | None,
-) -> DataFrame:
-    """(query_id, item_id) candidate pairs sharing a bucket in any table.
+) -> tuple[DataFrame, DataFrame]:
+    """Bucket rows of both sides: (query_id, _qv, bucket) and
+    (item_id, _iv, bucket), one row per vector per table.
 
     max_bucket caps the ITEM side of every bucket cell to that many
     members (deterministic pseudo-random pick, different subset per
@@ -426,8 +370,8 @@ def _lsh_candidates(
     of two-sided capping). Capping trades recall only among items
     sharing a capped bucket; other tables can still recover the pair."""
     keys = _bucket_keys_udf(planes, n_tables)
-    qb = q.select("query_id", F.explode(keys(F.col("_qv"))).alias("bucket"))
-    ib = i.select("item_id", F.explode(keys(F.col("_iv"))).alias("bucket"))
+    qb = q.select("query_id", "_qv", F.explode(keys(F.col("_qv"))).alias("bucket"))
+    ib = i.select("item_id", "_iv", F.explode(keys(F.col("_iv"))).alias("bucket"))
     if max_bucket is not None:
         # cap the ITEM side only: a hot cell costs |q_cell|·max_bucket
         # (linear in cluster size) instead of |cell|², and every query
@@ -448,11 +392,26 @@ def _lsh_candidates(
         # 64·max_bucket rows per bucket and returns the IDENTICAL subset
         # a direct per-bucket window would.
         ib = _cap_items(ib, max_bucket)
-    # bucket join + dedup on BARE IDS — at 1024-dim embeddings, carrying
-    # vectors through the distinct would shuffle ~8KB/row; instead the
-    # widest exchanges (bucket join, dedup) move only (bucket, id) /
-    # (query_id, item_id), and vectors rejoin once for exact scoring
-    cand = qb.join(ib, "bucket").drop("bucket")
+    return qb, ib
+
+
+def _lsh_candidates(
+    q: DataFrame,
+    i: DataFrame,
+    planes,
+    n_tables: int,
+    exclude_self: bool,
+    max_bucket: int | None,
+) -> DataFrame:
+    """(query_id, item_id) candidate pairs sharing a bucket in any table:
+    the bare-id projection of _lsh_buckets, for counting the candidate
+    set cosine_topk_lsh scores."""
+    qb, ib = _lsh_buckets(q, i, planes, n_tables, max_bucket)
+    cand = (
+        qb.select("query_id", "bucket")
+        .join(ib.select("item_id", "bucket"), "bucket")
+        .drop("bucket")
+    )
     if exclude_self:
         cand = cand.where(F.col("query_id") != F.col("item_id"))
     return cand.dropDuplicates(["query_id", "item_id"])
@@ -474,95 +433,61 @@ def cosine_topk_lsh(
     min_sim: float | None = None,
     exclude_self: bool = True,
     max_bucket: int | None = None,
-    rerank: str = "bucket",
 ) -> DataFrame:
     """APPROXIMATE top-k cosine via sign-random-projection LSH.
 
     Each of n_tables tables buckets vectors by the sign pattern of
     n_planes Rademacher projections; candidates are pairs sharing a
-    bucket in ANY table, scored exactly (JVM dot) and window-top-k'd.
+    bucket in ANY table, scored exactly and window-top-k'd.
     Cost is Σ bucket-cell sizes (expected |Q|·|I| / 2^n_planes per
     table) instead of |Q|·|I|: the scale path when even the blocked
     nested-loop is too much. Recall rises with n_tables, selectivity
     with n_planes; max_bucket bounds hot cells on clustered data (see
-    _lsh_candidates — the analog of the reference's kNN candidate cap,
+    _lsh_buckets — the analog of the reference's kNN candidate cap,
     tool/Neo4jLouvainProcessor.py:109-153). Deterministic (md5-seeded
     planes) and, at max_bucket=None, fully SQL-expressible — the driver
     oracle replays it verbatim.
 
-    rerank picks where the exact dot runs; both produce IDENTICAL rows:
-    - 'bucket' (default): vectors ride the bucket shuffle (once per
-      table per vector) into cogrouped Arrow cells — one numpy matmul
-      per bucket cell emitting the cell's per-query top-k (exact: a
-      global top-k pair outranks all but <k candidates in any cell
-      containing it, and cross-table duplicates carry identical sims,
-      deduped by max) — so the only pair-wide exchange is the narrow
-      (query_id, item_id, sim) dedup groupBy, bounded at
-      |Q|·n_tables·k rows. Pair bytes: ~24·|Q|·n_tables·k +
-      n_tables·(|Q|+|I|)·dim_bytes. The scale default: on clustered/
-      near-dup corpora candidates per query ≫ 2·n_tables, and the r5
-      10× advisory measured the rejoin form at ~130 GB of shuffle for
-      600k clustered 64-dim vectors (killed two hosts' tmpfs) vs ~4 GB
-      for this form (r7: the former in-join JVM pair dot — 10M wide
-      join rows + interpreted HOF fold — measured 10.5s vs ~2s for the
-      cogrouped cells at the 30k bench shape).
-    - 'rejoin': bucket join and dedup move only (bucket, id) pairs and
-      vectors rejoin once per UNIQUE candidate. Wins only when
-      candidates per query < 2·n_tables (highly selective setups with
-      very wide vectors, e.g. 1024-dim at n_planes ≥ 16).
+    Scoring: vectors ride the bucket shuffle (once per table per vector)
+    into cogrouped Arrow cells — one numpy matmul per bucket cell
+    emitting the cell's per-query top-k (exact: a global top-k pair
+    outranks all but <k candidates in any cell containing it, and
+    cross-table duplicates carry identical sims, deduped by max) — so
+    the only pair-wide exchange is the narrow (query_id, item_id, sim)
+    dedup groupBy, bounded at |Q|·n_tables·k rows. Pair bytes:
+    ~24·|Q|·n_tables·k + n_tables·(|Q|+|I|)·dim_bytes. The r5 10×
+    advisory measured a bare-id candidate join with a vector rejoin at
+    ~130 GB of shuffle for 600k clustered 64-dim vectors vs ~4 GB for
+    this form (BENCH/ann_10x_advisory.md).
+
+    Each side has one consumer, so no input snapshot is taken: every
+    action on the result re-executes the callers' lineage for queries
+    and items. Callers that run several actions on the result (count,
+    then collect) must snapshot their own featurized inputs first.
     """
-    if rerank not in ("bucket", "rejoin"):
-        raise ValueError("rerank must be 'bucket' or 'rejoin'")
     planes = rademacher_planes(dim, n_planes, n_tables, seed)
-    # rejoin mode consumes each side twice (bucketing branch + scoring
-    # rejoin), so it snapshots both to keep the callers' upstream lineage
-    # (often a pandas-UDF featurize) from executing twice per side. In
-    # bucket mode the vectors RIDE the bucket rows — one consumer per
-    # side — so a snapshot is a pure extra materialization pass and is
-    # skipped (r7; results identical either way, checkpoints are
-    # value-neutral).
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
     i = items.select(F.col(i_id).alias("item_id"), F.col(i_vec).alias("_iv"))
-    if rerank == "rejoin":
-        q = q.localCheckpoint(eager=True)
-        i = i.localCheckpoint(eager=True)
-    if rerank == "bucket":
-        keys = _bucket_keys_udf(planes, n_tables)
-        qb = q.select("query_id", "_qv", F.explode(keys(F.col("_qv"))).alias("bucket"))
-        ib = i.select("item_id", "_iv", F.explode(keys(F.col("_iv"))).alias("bucket"))
-        if max_bucket is not None:
-            ib = _cap_items(ib, max_bucket)
-        # Score each bucket CELL in the shared cogrouped Arrow kernel (one
-        # numpy matmul per cell, 16MB-blocked) instead of materializing
-        # every (query, item) pair as a wide JVM join row and folding an
-        # interpreted per-pair dot: at the 30k×64-dim bench shape the join
-        # emitted 10M+ rows each dragging two 512B vectors (~10 GB of row
-        # copies) and the HOF dot was CodegenFallback — measured 10.5s for
-        # join+dot+dedup vs ~2s for the cogrouped form. Emitting only each
-        # cell's per-query top-k is exact: a pair in the GLOBAL top-k
-        # outranks all but <k candidates in any cell containing it (cells
-        # are candidate subsets), so it survives every cell's local top-k;
-        # cross-table duplicate pairs carry identical sims, which the
-        # existing max() dedup collapses. min_sim/self-exclusion happen
-        # in-kernel, identically to the former pre-window filters.
-        cell = _make_topk_cell_arrow(int(k), min_sim, bool(exclude_self))
-        pair = (
-            qb.groupby("bucket")
-            .cogroup(ib.groupby("bucket"))
-            .applyInArrow(cell, "query_id long, item_id long, sim double")
-        )
-        scored = pair.groupBy("query_id", "item_id").agg(F.max("sim").alias("sim"))
-    else:
-        cand = _lsh_candidates(q, i, planes, n_tables, exclude_self, max_bucket)
-        scored = (
-            cand.join(q, "query_id")
-            .join(i, "item_id")
-            .select(
-                "query_id", "item_id", dot_col(F.col("_qv"), F.col("_iv")).alias("sim")
-            )
-        )
-        if min_sim is not None:
-            scored = scored.where(F.col("sim") >= min_sim)
+    qb, ib = _lsh_buckets(q, i, planes, n_tables, max_bucket)
+    # Score each bucket CELL in the shared cogrouped Arrow kernel (one
+    # numpy matmul per cell, 16MB-blocked) instead of materializing
+    # every (query, item) pair as a wide JVM join row and folding an
+    # interpreted per-pair dot: at the 30k×64-dim bench shape the join
+    # emitted 10M+ rows each dragging two 512B vectors (~10 GB of row
+    # copies) and the HOF dot was CodegenFallback — measured 10.5s for
+    # join+dot+dedup vs ~2s for the cogrouped form. Emitting only each
+    # cell's per-query top-k is exact: a pair in the GLOBAL top-k
+    # outranks all but <k candidates in any cell containing it (cells
+    # are candidate subsets), so it survives every cell's local top-k;
+    # cross-table duplicate pairs carry identical sims, which the
+    # max() dedup collapses. min_sim/self-exclusion happen in-kernel.
+    cell = _make_topk_cell_arrow(int(k), min_sim, bool(exclude_self))
+    pair = (
+        qb.groupby("bucket")
+        .cogroup(ib.groupby("bucket"))
+        .applyInArrow(cell, "query_id long, item_id long, sim double")
+    )
+    scored = pair.groupBy("query_id", "item_id").agg(F.max("sim").alias("sim"))
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("item_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
@@ -615,32 +540,16 @@ def train_ivf_centroids(
     return [[float(v) for v in row] for row in c]
 
 
-def _ivf_assign_expr(vec_col, centroids: list[list[float]], top: int):
-    """Top-`top` centroid indices for a vector, as a JVM-side expression:
-    array of (dot, idx) structs → sort desc → slice → extract idx.
-    Width is O(n_lists·dim) literal terms PER ROW — fine for a handful of
-    lists, a codegen blow-up beyond (measured 2x+ the whole-query cost at
-    n_lists=64); cosine_topk_ivf uses the Arrow kernel below instead and
-    this stays as the all-JVM small-index variant."""
-    scored = F.array(*[
-        F.struct(
-            (-dot_col(vec_col, F.array(*[F.lit(float(v)) for v in c]))).alias("negdot"),
-            F.lit(j).alias("idx"),
-        )
-        for j, c in enumerate(centroids)
-    ])
-    return F.transform(F.slice(F.array_sort(scored), 1, top), lambda s: s["idx"])
-
-
 def _ivf_assign_udf(centroids: list[list[float]], top: int):
     """Top-`top` centroid indices as a VECTORIZED Arrow kernel: one numpy
     matmul per batch against the closure-captured centroid matrix
     (O(n_lists·dim) floats, shipped once per executor). Ties break to the
-    smaller index (stable argsort on -dots), the same order as
-    _ivf_assign_expr's (negdot, idx) struct sort and as the independent
-    golden generator (tools/gen_ivf_golden.py) — all three pick identical
-    lists whenever the margin exceeds ulp noise, which the generator
-    asserts."""
+    smaller index (stable argsort on -dots), the same order as the
+    independent golden generator (tools/gen_ivf_golden.py) — both pick
+    identical lists whenever the margin exceeds ulp noise, which the
+    generator asserts. The equivalent JVM expression is O(n_lists·dim)
+    literal terms per row, measured 2x+ the whole-query cost at
+    n_lists=64."""
     from pyspark.sql.functions import pandas_udf
 
     c_t = np.asarray(centroids, dtype=np.float64).T  # (dim, n_lists)
@@ -682,7 +591,7 @@ def cosine_topk_ivf(
 ) -> DataFrame:
     """APPROXIMATE top-k cosine via IVF-Flat: a coarse k-means quantizer
     partitions items into n_lists inverted lists; each query probes its
-    n_probe nearest lists and is re-ranked EXACTLY (JVM dot) against only
+    n_probe nearest lists and is re-ranked EXACTLY (numpy cells) against only
     those lists' members.
 
     The complementary scale path to cosine_topk_lsh: LSH cells are
@@ -705,13 +614,13 @@ def cosine_topk_ivf(
     # lineage executes once with or without a snapshot — the former
     # eager localCheckpoint was a pure extra materialization pass
     # (measured 0.65s of the stage's cold wall at the 30k bench shape).
-    # i keeps its snapshot: it feeds both the bounded training sample
-    # and the assignment pass.
+    # i is snapshotted only when training: then it feeds both the bounded
+    # training sample and the assignment pass; with given centroids the
+    # assignment pass is its one consumer.
     q = queries.select(F.col(q_id).alias("query_id"), F.col(q_vec).alias("_qv"))
-    i = items.select(
-        F.col(i_id).alias("item_id"), F.col(i_vec).alias("_iv")
-    ).localCheckpoint(eager=True)
+    i = items.select(F.col(i_id).alias("item_id"), F.col(i_vec).alias("_iv"))
     if centroids is None:
+        i = i.localCheckpoint(eager=True)
         centroids = train_ivf_centroids(
             i, dim, n_lists=n_lists, kmeans_iters=kmeans_iters, sample=sample,
             i_vec="_iv", i_id="item_id",
@@ -734,13 +643,13 @@ def cosine_topk_ivf(
     # and the re-rank item side consume ix0, and without a checkpoint
     # each consumer re-executes the Arrow assignment kernel (plus its
     # python-worker stage spin-up). Fresh-process A/B at the 30k bench
-    # shape (tools/diag_ivf_counts_ab.py, output bit-identical): quiet
-    # host 5.9s vs 16.4s cold; contended host per-arm minima 10.2s vs
-    # 11.5s over 5 reps — the duplicated-kernel cost is host-dependent
-    # but the materialized form's minimum never loses, and at scale the
-    # saved work is a full O(|I|·n_lists·dim) assignment pass. Storage
-    # cost is one (id, vec, list_id) copy on executor-local disk, the
-    # same order as the `i` input snapshot above.
+    # shape (r6, output bit-identical): quiet host 5.9s vs 16.4s cold;
+    # contended host per-arm minima 10.2s vs 11.5s over 5 reps — the
+    # duplicated-kernel cost is host-dependent but the materialized
+    # form's minimum never loses, and at scale the saved work is a full
+    # O(|I|·n_lists·dim) assignment pass. Storage cost is one
+    # (id, vec, list_id) copy on executor-local disk, the same order as
+    # the training-time `i` snapshot above.
     ix0 = i.withColumn(
         "list_id", F.element_at(assign1(F.col("_iv")), 1)
     ).localCheckpoint(eager=True)

@@ -165,12 +165,11 @@ def repetition_scores(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    impl: str = "arrow",
 ) -> DataFrame:
-    """Gopher-style repetition signals per document — Arrow-batched
-    kernel by default (guide §4.2), with the original pure-Catalyst
-    expression form retained as impl='expr' (the semantics spec and the
-    parity-test twin; the DuckDB oracle replays that form).
+    """Gopher-style repetition signals per document as an Arrow-batched
+    kernel (guide §4.2). The original pure-Catalyst expression form,
+    _repetition_scores_expr, is the semantics spec: the DuckDB oracle
+    replays it and the parity test calls it directly.
 
     Why a Python kernel here, against the repo's JVM-first bias:
     Catalyst higher-order functions (transform/aggregate/array_sort
@@ -188,10 +187,6 @@ def repetition_scores(
 
     See _repetition_scores_expr for the signal definitions.
     """
-    if impl == "expr":
-        return _repetition_scores_expr(docs, id_col, text_col)
-    if impl != "arrow":
-        raise ValueError(f"unknown repetition_scores impl: {impl!r}")
     from pyspark.sql import types as T
 
     from louvain_spark.plans.fanout import apply_scan_fanout

@@ -51,3 +51,38 @@ def test_fanout_is_result_invariant(spark):
     a = sorted(map(tuple, repetition_scores(docs).collect()))
     b = sorted(map(tuple, repetition_scores(plain).collect()))
     assert a == b
+
+
+def test_load_leaves_many_row_group_table_unmarked(spark, tmp_path):
+    """The other side of the gate: a small payload-heavy file whose scan
+    already has >= defaultParallelism row groups parallelizes on its own,
+    so load() must not mark it. The same rows in one row group are
+    marked, so only the row-group count decides."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    par = spark.sparkContext.defaultParallelism
+    n_rows = 4 * par
+    table = pa.table(
+        {
+            "doc_id": pa.array(range(n_rows), pa.int64()),
+            # hex digests: incompressible payload, so bytes/row stays
+            # above the gate's floor after parquet encoding
+            "text": pa.array(
+                ["".join(hashlib.sha256(f"{i}:{j}".encode()).hexdigest() for j in range(4))
+                 for i in range(n_rows)]
+            ),
+        }
+    )
+    many = tmp_path / "many"
+    one = tmp_path / "one"
+    many.mkdir()
+    one.mkdir()
+    pq.write_table(table, many / "docs.parquet", row_group_size=4)
+    pq.write_table(table, one / "docs.parquet")
+    assert pq.ParquetFile(many / "docs.parquet").metadata.num_row_groups >= par
+
+    assert getattr(load(spark, str(many), "docs"), "_scan_fanout", None) is None
+    assert getattr(load(spark, str(one), "docs"), "_scan_fanout", None) == par

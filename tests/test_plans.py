@@ -143,9 +143,9 @@ def test_lsh_ann_dedup_exchange_carries_only_ids(spark):
     """VERDICT r2 #4, generalized for the r5 bucket-local default: NO
     pair-wide exchange may carry the vectors — at 1024-dim embeddings
     that would move ~8KB per candidate row (the exact shuffle explosion
-    the r5 10x advisory caught, BENCH/ann_10x_advisory.md). rejoin mode
-    dedups bare id pairs (2 columns); bucket mode's pair-wide exchange is
-    the sim dedup groupBy (ids + one 8-byte partial max)."""
+    the r5 10x advisory caught, BENCH/ann_10x_advisory.md). The one
+    pair-wide exchange is the sim dedup groupBy (ids + one 8-byte partial
+    max)."""
     from louvain_spark.operators.similarity import cosine_topk_lsh
 
     emb = load(spark, SF, "embeddings")
@@ -154,23 +154,22 @@ def test_lsh_ann_dedup_exchange_carries_only_ids(spark):
         F.col("vec_id").alias("id"),
         F.transform("embedding", lambda x: x / norm).alias("vec"),
     )
-    for mode, max_cols in (("rejoin", "2"), ("bucket", "3")):
-        top = cosine_topk_lsh(
-            spark, unit.where(F.col("id") < 20), unit, k=5, dim=64,
-            n_planes=6, n_tables=3, rerank=mode,
-        )
-        plan = _plan(top)
-        dedup_exchanges = [
-            b
-            for b in re.split(r"\n(?=\(\d+\) )", plan)
-            if b.split("\n")[0].endswith("Exchange")
-            and re.search(r"hashpartitioning\(query_id#\d+L, item_id#\d+L", b)
-        ]
-        assert dedup_exchanges, (mode, plan)
-        for b in dedup_exchanges:
-            m = re.search(r"Input \[(\d+)\]: \[([^\]]*)\]", b)
-            assert m and int(m.group(1)) <= int(max_cols), (mode, b)
-            assert "_qv" not in b and "_iv" not in b, (mode, b)
+    top = cosine_topk_lsh(
+        spark, unit.where(F.col("id") < 20), unit, k=5, dim=64,
+        n_planes=6, n_tables=3,
+    )
+    plan = _plan(top)
+    dedup_exchanges = [
+        b
+        for b in re.split(r"\n(?=\(\d+\) )", plan)
+        if b.split("\n")[0].endswith("Exchange")
+        and re.search(r"hashpartitioning\(query_id#\d+L, item_id#\d+L", b)
+    ]
+    assert dedup_exchanges, plan
+    for b in dedup_exchanges:
+        m = re.search(r"Input \[(\d+)\]: \[([^\]]*)\]", b)
+        assert m and int(m.group(1)) <= 3, b
+        assert "_qv" not in b and "_iv" not in b, b
 
 
 def test_events_vertices_plan_has_no_single_partition_window(spark):

@@ -175,8 +175,9 @@ def test_lsh_hot_bucket_cap_clustered(spark):
     shrinks it further by capping hot cells on the item side (cost
     |q_cell|*cap, linear in cluster size, instead of |cell|^2); (c) exact
     re-rank keeps recall@10 vs the blocked exact result above a pinned
-    floor in both modes. All values deterministic (seeded data + md5
-    planes)."""
+    floor with and without the cap. (a)/(b) count the candidates of the
+    bucketing helper cosine_topk_lsh scores. All values deterministic
+    (seeded data + md5 planes)."""
     from louvain_spark.operators.similarity import (
         _lsh_candidates,
         cosine_topk_lsh,
@@ -274,30 +275,43 @@ def test_ivf_topk_clustered_recall(spark):
     assert c1 == c2, "IVF training must be deterministic"
 
 
-def test_lsh_rerank_modes_identical(spark):
-    """'bucket' (scale default: score inside the bucket join, dedup by
-    max) and 'rejoin' (bare-id exchanges, vectors rejoin once) must
-    return byte-identical rows — with and without the hot-cell cap."""
-    import numpy as np
-
-    from louvain_spark.operators.similarity import cosine_topk_lsh
+def test_lsh_topk_equals_exact_topk_over_candidates(spark):
+    """Scoring in bucket cells (per-cell top-k, cross-table max dedup)
+    must return exactly the top-k of the full candidate set scored one
+    pair at a time — with and without the hot-cell cap. The candidate set
+    comes from the same bucketing helper, so this pins the cell kernel's
+    exactness claim, not LSH recall."""
+    from louvain_spark.operators.similarity import (
+        _lsh_candidates,
+        cosine_topk_lsh,
+        rademacher_planes,
+    )
 
     rng = np.random.default_rng(7)
     base = rng.normal(size=(6, 16))
-    rows = []
-    for i in range(150):
-        v = base[i % 6] + 0.05 * rng.normal(size=16)
-        v = v / np.linalg.norm(v)
-        rows.append((i, [float(x) for x in v]))
-    df = spark.createDataFrame(rows, "id long, vec array<double>")
+    vecs = base[np.arange(150) % 6] + 0.05 * rng.normal(size=(150, 16))
+    vecs /= np.linalg.norm(vecs, axis=1, keepdims=True)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(150)],
+        "id long, vec array<double>",
+    )
+    q = df.select(F.col("id").alias("query_id"), F.col("vec").alias("_qv"))
+    it = df.select(F.col("id").alias("item_id"), F.col("vec").alias("_iv"))
+    planes = rademacher_planes(16, 6, 3, 42)
     for cap in (None, 8):
-        got = {}
-        for mode in ("bucket", "rejoin"):
-            got[mode] = sorted(
-                (r["query_id"], r["item_id"], r["rank"], round(r["sim"], 9))
-                for r in cosine_topk_lsh(
-                    spark, df, df, k=5, dim=16, n_planes=6, n_tables=3,
-                    max_bucket=cap, rerank=mode,
-                ).collect()
-            )
-        assert got["bucket"] == got["rejoin"], f"cap={cap}"
+        by_q: dict[int, list[tuple[float, int]]] = {}
+        for r in _lsh_candidates(q, it, planes, 3, True, cap).collect():
+            qi, ii = r["query_id"], r["item_id"]
+            by_q.setdefault(qi, []).append((-float(vecs[qi] @ vecs[ii]), ii))
+        want = sorted(
+            (qi, ii, rank)
+            for qi, cands in by_q.items()
+            for rank, (_, ii) in enumerate(sorted(cands)[:5], start=1)
+        )
+        got_rows = cosine_topk_lsh(
+            spark, df, df, k=5, dim=16, n_planes=6, n_tables=3, max_bucket=cap
+        ).collect()
+        got = sorted((r["query_id"], r["item_id"], r["rank"]) for r in got_rows)
+        assert got == want, f"cap={cap}"
+        for r in got_rows:
+            assert abs(r["sim"] - float(vecs[r["query_id"]] @ vecs[r["item_id"]])) < 1e-9
